@@ -157,220 +157,89 @@ def q_group_bools(spark, sf_dir):
 HIST = (32, -5.0, 30.0)  # (bins, lo, hi) — the composable sketch domain
 
 
-def _rollup_gate_cols(agg_with_stats):
-    # frames aggregated on raw user_id (the exchange-free cached path)
-    # project the string doc_id back here — same values as grouping on
-    # the cast, but the groupBy key matches the checkpoint partitioning
-    doc = (
-        F.col("user_id").cast("string")
-        if "user_id" in agg_with_stats.columns
-        else F.col("doc_id")
-    )
-    return agg_with_stats.select(
-        doc.alias("doc_id"),
+def _gate_scalars():
+    # the aggregates group on the raw long user_id (a narrower exchange
+    # and cheaper hashing than the string cast); doc_id is projected back
+    return [
+        F.col("user_id").cast("string").alias("doc_id"),
         F.unix_timestamp("bucket_start").cast("long").alias("bucket_s"),
         F.col("cnt").cast("long").alias("cnt"),
-        F.round("sum_val", 6).alias("sum_val"),
-        F.round("avg_val", 6).alias("avg_val"),
-        F.round("min_val", 6).alias("min_val"),
-        F.round("max_val", 6).alias("max_val"),
-        F.round("open_val", 6).alias("open_val"),
-        F.round("close_val", 6).alias("close_val"),
-        F.round("counter_delta", 6).alias("counter_delta"),
+        *[F.round(c, 6).alias(c) for c in ("sum_val", "avg_val", "min_val", "max_val")],
+    ]
+
+
+def _tier_rows(agg, label):
+    from pyhydroqc_spark.operators import rollup
+
+    return rollup.hist_stats(agg).select(
+        *_gate_scalars(),
+        *[F.round(c, 6).alias(c) for c in ("open_val", "close_val", "counter_delta")],
         "hist_checksum",
         "p50_bin",
         "p95_bin",
+        label.alias("tier"),
+        F.lit(False).alias("is_gap"),
     )
 
 
-def _rollup(spark, sf_dir, tier, df=None):
-    """Scalar aggregates AND the percentile sketch in ONE hash
-    aggregation (hist= rides the same groupBy — no second pass, no
-    join), stats derived in a projection. A frame that already carries
-    ``increment`` (the cached long frame — computed once in the same
-    window as ``pos``) skips the per-subtree lag window entirely."""
-    from pyhydroqc_spark.operators import rollup
-
-    if df is None:
-        df = _events_long(spark, sf_dir)
-    inc = (
-        df
-        if "increment" in df.columns
-        else rollup.with_counter_increments(df, value_col="value", order_col="pos")
-    )
-    key = "user_id" if "user_id" in df.columns else "doc_id"
-    out = rollup.rollup_points(
-        inc, tier, value_col="value", hist=HIST, order_col="pos",
-        sum_cols={"increment": "counter_delta"}, key=key,
-    )
-    return _rollup_gate_cols(rollup.hist_stats(out))
-
-
-def q_rollup_15min(spark, sf_dir):
-    return _rollup(spark, sf_dir, 900)
-
-
-def q_rollup_1h(spark, sf_dir):
-    return _rollup(spark, sf_dir, 3600)
-
-
-def q_rollup_1d(spark, sf_dir):
-    return _rollup(spark, sf_dir, 86400)
-
-
-def q_rollup_tiered_1d(spark, sf_dir, df=None):
-    from pyhydroqc_spark.operators import rollup
-
-    # the sketch composes through the cascade (rollup_from_rollup sums
-    # the 1h histograms elementwise): composed 1d stats must hash-match
-    # the direct 1d row-set — the driver-checked mergeability proof
-    if df is None:
-        df = _events_long(spark, sf_dir)
-    inc = (
-        df
-        if "increment" in df.columns
-        else rollup.with_counter_increments(df, value_col="value", order_col="pos")
-    )
-    key = "user_id" if "user_id" in df.columns else "doc_id"
-    h1 = rollup.rollup_points(
-        inc, 3600, value_col="value", hist=HIST, order_col="pos",
-        sum_cols={"increment": "counter_delta"}, key=key,
-    )
-    d1 = rollup.rollup_from_rollup(
-        h1.drop("tier"), 86400, sum_cols=("counter_delta",), key=key
-    )
-    return _rollup_gate_cols(rollup.hist_stats(d1))
-
-
-def _rollup_long_checkpointed(spark, sf_dir):
-    # localCheckpoint, NOT persist: a persisted frame is plan-matched by
-    # Spark's CacheManager into EVERY other query that derives the same
-    # _events_long subtree (ar1_residuals' audited no-persist contract
-    # broke from a cache created here); a LogicalRDD is a distinct plan
-    # that nothing else can silently substitute.
-    #
-    # Deliberately NOT memoized across invocations: every call rebuilds
-    # the frame from events.parquet and re-materializes it, so a repeated
-    # gate run (e.g. the bench's min-of-2) pays the scan+window each time.
-    # The checkpoint's only job is WITHIN-invocation sharing — the gate's
-    # six row-sets read one materialized copy instead of each re-running
-    # the scan+window subtree (6× the work, measured 4.7s -> ~1.4s at
-    # sf0.1) — plus plan truncation for Catalyst.
-    from pyhydroqc_spark.operators.rollup import counter_increment_expr
-
-    # pos AND the counter increment in ONE window pass: lag() rides the
-    # same (user_id; ts, event_id) exchange+sort as row_number(), so
-    # the four tier row-sets that need `increment` skip their own
-    # per-subtree lag window (was 4 extra exchange+sorts per gate run).
-    # RAW user_id stays in the frame: the row-sets group on the 8-byte
-    # long key and project the string doc_id back after aggregation —
-    # narrower exchanges (guide §2.3) and cheaper hashing than the
-    # string cast. (An InMemoryRelation persist whose preserved
-    # hashpartitioning(user_id) made the row-sets fully exchange-free
-    # was built and measured: 6-rep interleaved min 2.64 vs 2.47 for
-    # this checkpoint — the columnar cache scan cost more than the
-    # ~100k-row exchanges it removed, so the checkpoint stays.)
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    v = F.col("value")
-    long_inc = ev.select(
-        "user_id",
-        F.col("user_id").cast("string").alias("doc_id"),
-        (F.row_number().over(w) - 1).cast("long").alias("pos"),
-        "ts",
-        "value",
-        counter_increment_expr(v, F.lag("value").over(w)).alias("increment"),
-    )
-    return long_inc.localCheckpoint(eager=True)
-
-
-def q_rollup_tiers(spark, sf_dir):
-    """ALL retention tiers in one driver gate: direct 15min/1h/1d rollups
-    plus the 1h→1d tiered cascade (rollup_from_rollup — must equal the
-    direct 1d), unioned under a ``tier`` label so every tier's values are
-    hash-checked independently. Consolidates the four r4 gates
-    rollup_15min/1h/1d/tiered_1d into one queries() slot (the driver
-    artifact caps near 50 entries — see CHANGES_r05.md)."""
-    # ONE persisted copy of the windowed long frame feeds all six
-    # row-sets: the gate deliberately computes every tier DIRECT from
-    # facts (to cross-check the cascade), so without the shared copy the
-    # six subtrees each redo the scan+window — 4.7s -> ~1.4s at sf0.1.
-    # It is materialized EAGERLY (one cheap action) and rebuilt on every
-    # invocation (no cross-call memo — see _rollup_long_checkpointed).
-    # At corpus
-    # scale you would not cache facts; rollup_all_tiers' tier-from-tier
-    # cascade scans them once instead.
-    long_df = _rollup_long_checkpointed(spark, sf_dir)
-    parts = [
-        _rollup(spark, sf_dir, 900, df=long_df).withColumn("tier", F.lit("15min")),
-        _rollup(spark, sf_dir, 3600, df=long_df).withColumn("tier", F.lit("1h")),
-        _rollup(spark, sf_dir, 86400, df=long_df).withColumn("tier", F.lit("1d")),
-        q_rollup_tiered_1d(spark, sf_dir, df=long_df).withColumn("tier", F.lit("tiered_1d")),
-    ]
-    out = parts[0].withColumn("is_gap", F.lit(False))
-    for p in parts[1:]:
-        out = out.unionByName(p.withColumn("is_gap", F.lit(False)))
-    # r6 session-4: the gap-fill READ operators (time_bucket_gapfill /
-    # locf / interpolate analogues) join the gate as two more row-sets:
-    # the dense 1d grid with the default fills (cnt/sum→0, stats
-    # interpolated in bucket time), and a 6-series 1h grid exercising
-    # every strategy at once (locf avg, interpolated min, NULL-densified
-    # max). is_gap marks the synthesized rows, hash-checked like all else.
-    return out.unionByName(_gapfill_tier(spark, sf_dir, df=long_df)).unionByName(
-        _gapfill_tier_1h(spark, sf_dir, df=long_df)
-    )
-
-
-def _gapfill_parts(gf):
-    doc = (
-        F.col("user_id").cast("string")
-        if "user_id" in gf.columns
-        else F.col("doc_id")
-    )
+def _gap_rows(gf, label):
+    # sketch/OHLC columns ride only the tier row-sets (a synthesized gap
+    # bucket has no histogram or first/last value)
     return gf.select(
-        doc.alias("doc_id"),
-        F.unix_timestamp("bucket_start").cast("long").alias("bucket_s"),
-        F.col("cnt").cast("long").alias("cnt"),
-        F.round("sum_val", 6).alias("sum_val"),
-        F.round("avg_val", 6).alias("avg_val"),
-        F.round("min_val", 6).alias("min_val"),
-        F.round("max_val", 6).alias("max_val"),
-        "is_gap",
-        # sketch/OHLC columns ride only the tier row-sets (a synthesized
-        # gap bucket has no histogram or first/last value)
-        F.lit(None).cast("double").alias("open_val"),
-        F.lit(None).cast("double").alias("close_val"),
-        F.lit(None).cast("double").alias("counter_delta"),
+        *_gate_scalars(),
+        *[
+            F.lit(None).cast("double").alias(c)
+            for c in ("open_val", "close_val", "counter_delta")
+        ],
         F.lit(None).cast("long").alias("hist_checksum"),
         F.lit(None).cast("int").alias("p50_bin"),
         F.lit(None).cast("int").alias("p95_bin"),
+        F.lit(label).alias("tier"),
+        "is_gap",
     )
 
 
-def _gapfill_tier(spark, sf_dir, df=None):
+def q_rollup_tiers(spark, sf_dir):
+    """ALL retention tiers in one contract gate, from ONE fact aggregation:
+    direct 15min/1h/1d rows (scalars, OHLC, counter deltas and the
+    percentile sketch), the 1h→1d cascade (rollup_from_rollup — must
+    equal the direct 1d), and two gap-filled grids (time_bucket_gapfill /
+    locf / interpolate analogues: the dense 1d grid with the default
+    fills, and a 6-series 1h grid exercising every strategy at once),
+    unioned under a ``tier`` label so every row-set is hash-checked
+    independently. ``is_gap`` marks the synthesized rows."""
     from pyhydroqc_spark.operators import rollup
 
-    if df is None:
-        df = _events_long(spark, sf_dir)
-    key = "user_id" if "user_id" in df.columns else "doc_id"
-    agg = rollup.rollup_points(df, 86400, value_col="value", key=key).drop("tier")
-    return _gapfill_parts(rollup.gapfill(agg, 86400, key=key)).withColumn(
-        "tier", F.lit("gapfill_1d")
+    # pos AND the counter increment in ONE window pass: lag() rides the
+    # same (user_id; ts, event_id) exchange+sort as row_number()
+    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    facts = ev.select(
+        "user_id",
+        (F.row_number().over(w) - 1).cast("long").alias("pos"),
+        "ts",
+        "value",
+        rollup.counter_increment_expr(
+            F.col("value"), F.lag("value").over(w)
+        ).alias("increment"),
     )
-
-
-def _gapfill_tier_1h(spark, sf_dir, df=None):
-    from pyhydroqc_spark.operators import rollup
-
-    if df is None:
-        df = _events_long(spark, sf_dir)
-    df = df.where(F.col("doc_id").cast("long") % 25 == 0)
-    key = "user_id" if "user_id" in df.columns else "doc_id"
-    agg = rollup.rollup_points(df, 3600, value_col="value", key=key).drop("tier")
-    gf = rollup.gapfill(
-        agg,
+    agg = rollup.rollup_points(
+        facts, (900, 3600, 86400), value_col="value", hist=HIST, order_col="pos",
+        sum_cols={"increment": "counter_delta"}, key="user_id",
+    )
+    tier = F.col("tier")
+    h1 = agg.where(tier == 3600).drop("tier")
+    tiered_1d = rollup.rollup_from_rollup(
+        h1, 86400, sum_cols=("counter_delta",), key="user_id"
+    )
+    scalars = ["user_id", "bucket_start", *rollup.AGG_COLS]
+    gap_1d = rollup.gapfill(
+        agg.where(tier == 86400).select(scalars), 86400, key="user_id"
+    )
+    gap_1h = rollup.gapfill(
+        h1.where(F.col("user_id") % 25 == 0).select(scalars),
         3600,
-        key=key,
+        key="user_id",
         fill={
             "cnt": "zero",
             "sum_val": "zero",
@@ -379,7 +248,13 @@ def _gapfill_tier_1h(spark, sf_dir, df=None):
             "max_val": "null",
         },
     )
-    return _gapfill_parts(gf).withColumn("tier", F.lit("gapfill_1h_s25"))
+    label = F.when(tier == 900, "15min").when(tier == 3600, "1h").otherwise("1d")
+    return (
+        _tier_rows(agg, label)
+        .unionByName(_tier_rows(tiered_1d, F.lit("tiered_1d")))
+        .unionByName(_gap_rows(gap_1d, "gapfill_1d"))
+        .unionByName(_gap_rows(gap_1h, "gapfill_1h_s25"))
+    )
 
 
 def q_edge_filter(spark, sf_dir):

@@ -11,6 +11,10 @@ Scale design:
 * coarser tiers re-aggregate the next-finer tier (1h from 15min, 1d from
   1h) — sum/min/max/count compose, avg is recomputed as Σsum/Σcnt; this is
   a ~96× smaller input than re-scanning facts;
+* every tier can also come DIRECT from facts in one aggregation
+  (``rollup_points(df, (900, 3600, 86400))``): each row joins one bucket
+  per tier and ``tier`` becomes a grouping key — one scan, one exchange,
+  for all tiers (the same one-pass contract as ``fused_tokens_to_cells``);
 * bucket = epoch-floor, a pure column expression (partition-prunable when
   the table is laid out by bucket day).
 """
@@ -27,7 +31,8 @@ DEFAULT_TIERS = (TIER_15MIN, TIER_1H, TIER_1D)
 AGG_COLS = ["cnt", "sum_val", "avg_val", "min_val", "max_val"]
 
 
-def bucket_col(ts_col: str, tier_seconds: int):
+def bucket_col(ts_col: str, tier_seconds):
+    """Epoch-floor bucket start; ``tier_seconds`` is an int or a column."""
     return F.timestamp_seconds(
         F.floor(F.unix_timestamp(F.col(ts_col)) / tier_seconds) * tier_seconds
     )
@@ -35,7 +40,7 @@ def bucket_col(ts_col: str, tier_seconds: int):
 
 def rollup_points(
     df: DataFrame,
-    tier_seconds: int,
+    tier_seconds: int | tuple,
     value_col: str = "det_cor",
     ts_col: str = "ts",
     key: str = "doc_id",
@@ -44,7 +49,12 @@ def rollup_points(
     sum_cols: dict | None = None,
     distinct_col: str | None = None,
 ) -> DataFrame:
-    """Fact rows → one aggregate row per (series, bucket). ``hist=(bins,
+    """Fact rows → one aggregate row per (series, bucket, tier).
+    ``tier_seconds`` is one tier or a tuple of tiers: with a tuple each
+    row is exploded into its bucket of every tier and ``tier`` joins the
+    grouping keys, so ONE aggregation yields all tiers (filter a tier out
+    by ``tier``, a narrow op). With one tier, ``tier`` stays a literal
+    label outside the grouping keys. ``hist=(bins,
     lo, hi)`` rides the composable percentile sketch in the SAME hash
     aggregation (32 extra conditional counts — no second corpus pass, no
     join; this is how a continuous aggregate keeps percentile state next
@@ -91,23 +101,24 @@ def rollup_points(
             )
             for i in range(n_bins)
         ]
+    by = [key, "bucket_start"]
+    if isinstance(tier_seconds, (int, float)):
+        tier = F.lit(int(tier_seconds))
+    else:
+        df = df.withColumn(
+            "tier", F.explode(F.array(*[F.lit(int(t)) for t in tier_seconds]))
+        )
+        tier = F.col("tier")
+        by.append("tier")
     out = (
-        df.withColumn("bucket_start", bucket_col(ts_col, tier_seconds))
-        .groupBy(key, "bucket_start")
+        df.withColumn("bucket_start", bucket_col(ts_col, tier))
+        .groupBy(*by)
         .agg(*aggs)
     )
     if hist is not None:
-        keep = [key, "bucket_start", "cnt", "sum_val", "avg_val", "min_val", "max_val"]
-        if order_col is not None:
-            keep += ["open_val", "close_val"]
-        keep += list((sum_cols or {}).values())
-        if distinct_col is not None:
-            keep.append("uniq_sketch")
-        out = out.select(
-            *keep,
-            F.array(*[F.col(f"__b{i}") for i in range(n_bins)]).alias("hist"),
-        )
-    return out.withColumn("tier", F.lit(int(tier_seconds)))
+        bin_cols = [f"__b{i}" for i in range(n_bins)]
+        out = out.withColumn("hist", F.array(*bin_cols)).drop(*bin_cols)
+    return out.select(*[c for c in out.columns if c != "tier"], tier.alias("tier"))
 
 
 def rollup_from_rollup(
@@ -321,7 +332,9 @@ def gapfill(
 # (TimescaleDB percentile_agg / DataSketches). Here: a fixed-bin histogram —
 # integer counts, so tier composition is an exact elementwise vector sum,
 # replayable bit-for-bit by any SQL engine (no float wobble, unlike
-# t-digest), at 8·bins bytes per bucket.
+# t-digest), at 8·bins bytes per bucket. ``rollup_points(hist=...)`` builds
+# it inside the rollup's own aggregation, ``rollup_from_rollup`` composes
+# it and ``hist_stats`` reads it.
 
 
 def hist_col(value_col: str, bins: int, lo: float, hi: float):
@@ -329,59 +342,6 @@ def hist_col(value_col: str, bins: int, lo: float, hi: float):
     values land in the edge bins (sketch semantics, nothing dropped)."""
     raw = F.floor((F.col(value_col) - lo) / (hi - lo) * bins).cast("int")
     return F.least(F.greatest(raw, F.lit(0)), F.lit(bins - 1))
-
-
-def hist_points(
-    df: DataFrame,
-    tier_seconds: int,
-    bins: int = 32,
-    lo: float = -5.0,
-    hi: float = 30.0,
-    value_col: str = "det_cor",
-    ts_col: str = "ts",
-    key: str = "doc_id",
-) -> DataFrame:
-    """(key, bucket_start, hist array<long>): one histogram per bucket,
-    built in ONE hash aggregation (conditional-count per bin — the same
-    codegen-fold shape as the simhash/minhash aggregates; no explode, no
-    second shuffle)."""
-    b = hist_col(value_col, bins, lo, hi)
-    aggs = [
-        F.count(F.when((b == i) & F.col(value_col).isNotNull(), 1)).alias(f"__b{i}")
-        for i in range(bins)
-    ]
-    return (
-        df.withColumn("bucket_start", bucket_col(ts_col, tier_seconds))
-        .groupBy(key, "bucket_start")
-        .agg(*aggs)
-        .select(
-            key,
-            "bucket_start",
-            F.array(*[F.col(f"__b{i}") for i in range(bins)]).alias("hist"),
-        )
-    )
-
-
-def hist_from_hist(
-    hist_df: DataFrame, tier_seconds: int, key: str = "doc_id"
-) -> DataFrame:
-    """Compose a coarser tier's histograms from a finer tier's: exact
-    elementwise integer sum (1h ← 15min, 1d ← 1h) — the property raw
-    percentiles lack. `zip_with` fold over the ≤fan-in collected arrays
-    stays JVM-side; the shuffle carries one sketch per bucket."""
-    return (
-        hist_df.withColumn("bucket_start", bucket_col("bucket_start", tier_seconds))
-        .groupBy(key, "bucket_start")
-        .agg(
-            F.aggregate(
-                F.collect_list("hist"),
-                F.expr("CAST(array() AS array<bigint>)"),
-                lambda acc, x: F.when(F.size(acc) == 0, x).otherwise(
-                    F.zip_with(acc, x, lambda a, v: a + v)
-                ),
-            ).alias("hist")
-        )
-    )
 
 
 def hist_stats(hist_df: DataFrame, quantiles=(0.5, 0.95)) -> DataFrame:

@@ -48,6 +48,15 @@ def asof_join(
     from the left time; the matched right time is returned as
     ``{on}{suffix}``. Unmatched left rows keep NULLs.
 
+    Duplicate right rows at the same (key, time) resolve in
+    ``monotonically_increasing_id`` order — (partition index, offset):
+    backward takes the last, forward the first, as ``merge_asof`` does
+    over row order. That id order equals the right frame's row order only
+    for a fresh read (or any frame whose partitions still hold rows in
+    order); after a shuffle it is the post-shuffle partition order, so
+    give duplicates a distinguishing time or sort key when the winner
+    matters.
+
     Physical shape: union + running window — one exchange on ``by``, one
     sort on (time, side-tag); never a range join."""
     if direction not in ("backward", "forward"):

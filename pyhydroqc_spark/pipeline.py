@@ -224,9 +224,15 @@ def _commit_rollups(
 
 def retention_sweep(out_root: str, tiers=DEFAULT_TIERS, keep_pred=None) -> None:
     """Metadata-only retention: drop aged partitions + expire old snapshots
-    per tier table (Iceberg expire_snapshots analogue)."""
-    for t in tiers:
-        tbl = SnapshotTable(os.path.join(out_root, f"rollup_{t}s"))
+    per tier table and per blob table present — the ``comp_tier_{t}s``
+    tier blobs and the per-point ``compressed`` table share the tier
+    tables' partitions (Iceberg expire_snapshots analogue)."""
+    names = [f"{n}_{t}s" for t in tiers for n in ("rollup", "comp_tier")]
+    for name in names + ["compressed"]:
+        root = os.path.join(out_root, name)
+        if not os.path.isdir(root):
+            continue
+        tbl = SnapshotTable(root)
         if keep_pred is not None:
             tbl.drop_partitions(keep_pred)
         tbl.expire_snapshots(keep_last=2)

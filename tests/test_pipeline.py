@@ -151,6 +151,9 @@ def test_retention_sweep(spark, canon, tmp_path):
     P.retention_sweep(out, keep_pred=lambda p: p != "src0")
     fin = _read_tier(spark, out, 900)
     assert not any(d.startswith("src0") for d in fin["doc_id"])
+    # the tier blob tables are swept with their cell tables
+    blobs = SnapshotTable(os.path.join(out, "comp_tier_900s")).read(spark).toPandas()
+    assert len(blobs) and not any(d.startswith("src0") for d in blobs["doc_id"])
 
 
 def test_fused_modes_equal_native(spark, tmp_path):

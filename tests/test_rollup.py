@@ -40,6 +40,15 @@ def test_rollup_matches_resample(fact, tier, freq):
         np.testing.assert_allclose(mine["avg_val"], exp["mean"], atol=1e-9)
         np.testing.assert_allclose(mine["min_val"], exp["min"], atol=1e-12)
         np.testing.assert_allclose(mine["max_val"], exp["max"], atol=1e-12)
+    # the tuple form (every tier from one aggregation), filtered to this
+    # tier, equals the single-tier call
+    multi = (
+        rollup.rollup_points(df, (900, 3600, 86400))
+        .where(F.col("tier") == tier)
+        .orderBy("doc_id", "bucket_start")
+        .toPandas()
+    )
+    pd.testing.assert_frame_equal(multi, got, check_exact=False, rtol=1e-12, atol=1e-9)
 
 
 def test_tier_from_tier_equals_direct(fact):
@@ -127,20 +136,17 @@ def test_hist_sketch_composes_and_quantiles(spark):
         }
     )
     df = spark.createDataFrame(pdf)
-    h1 = rollup.hist_points(df, 3600, value_col="value")
-    direct = {
-        (r["doc_id"], r["bucket_start"]): list(r["hist"])
-        for r in rollup.hist_points(df, 86400, value_col="value").collect()
-    }
+    hist = (32, -5.0, 30.0)
+    h1 = rollup.rollup_points(df, 3600, value_col="value", hist=hist)
+    d1 = rollup.rollup_points(df, 86400, value_col="value", hist=hist)
+    direct = {(r["doc_id"], r["bucket_start"]): list(r["hist"]) for r in d1.collect()}
     composed = {
         (r["doc_id"], r["bucket_start"]): list(r["hist"])
-        for r in rollup.hist_from_hist(h1, 86400).collect()
+        for r in rollup.rollup_from_rollup(h1.drop("tier"), 86400).collect()
     }
     assert composed == direct and len(direct) > 4
 
-    st = rollup.hist_stats(
-        rollup.hist_points(df, 86400, value_col="value")
-    ).toPandas()
+    st = rollup.hist_stats(d1).toPandas()
     row = st.iloc[0]
     day = row["bucket_start"].timestamp()
     sub = pdf[pdf.doc_id == row["doc_id"]]
@@ -156,7 +162,7 @@ def test_hist_sketch_composes_and_quantiles(spark):
                       "value": [None]}).astype({"value": "float64"})
     )
     zrow = rollup.hist_stats(
-        rollup.hist_points(null_df, 86400, value_col="value")
+        rollup.rollup_points(null_df, 86400, value_col="value", hist=hist)
     ).collect()[0]
     assert zrow["hist_checksum"] == 0 and zrow["p50_bin"] is None
 

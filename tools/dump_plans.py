@@ -2,6 +2,8 @@
 
 Usage: python tools/dump_plans.py <suffix> [query,query,...]
 e.g.   python tools/dump_plans.py before
+       python tools/dump_plans.py after retention_counts,comp_roundtrip
+Named queries may be any queries() entry, not only the bench-timed ones.
 """
 
 from __future__ import annotations
@@ -42,9 +44,7 @@ def main():
     )
     os.makedirs(outdir, exist_ok=True)
     qs = entry.queries()
-    for name in BENCH_QUERIES:
-        if only and name not in only:
-            continue
+    for name in only or BENCH_QUERIES:
         try:
             plan = fmt(qs[name](spark, SF_DIR))
         except Exception as e:  # iterative queries that need an action
